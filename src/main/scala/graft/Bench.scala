@@ -55,13 +55,20 @@ object Bench {
       val runs = passes.map(_.find(_._1 == name).get._2)
       name -> (runs.map(_._1).min, runs.flatMap(_._2).headOption)
     }.toMap
-    val qs = results.map { case (k, (v, _)) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val errs = results.collect { case (k, (_, Some(e))) =>
-      "\"" + k + "\":\"" + e.replaceAll("[\"\\\\\n\r\t]", " ") + "\""
-    }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","runs_per_query":3,"reported":"min","schedule":"interleaved-passes"}"""
+    // Jackson escapes query names, error text and the path alike
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val line = mapper.createObjectNode()
+      .put("metric", "total").put("value", total).put("unit", "sec")
+    val qs = line.putObject("queries")
+    val errs = line.putObject("errors")
+    results.foreach { case (k, (v, err)) =>
+      qs.put(k, v)
+      err.foreach(errs.put(k, _))
+    }
+    line.put("sf", sfDir).put("runs_per_query", 3).put("reported", "min")
+      .put("schedule", "interleaved-passes")
+    val json = mapper.writeValueAsString(line)
     println(json)
     // the full per-query JSON also lands in a FILE: the stdout tail gets
     // truncated in round artifacts (BENCH_r07 lost its first ~35 queries),

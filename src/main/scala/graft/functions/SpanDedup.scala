@@ -58,26 +58,12 @@ object SpanDedup {
   /** Per-document duplicated-span report: `(id, n_spans, n_dup_spans,
     * dup_span_frac, keep)`. Documents with fewer than n tokens have zero
     * windows and are kept (frac 0). `keep` = dup_span_frac <= maxDupFrac.
-    * This is the oracle-portable (md5) path; [[spanReportFast]] is the
-    * production kernel. */
+    * The span hash is the oracle-portable md5 seam ([[spanHashes]]). */
   def spanReport(df: DataFrame, idCol: String, textCol: String, n: Int,
                  maxDupFrac: Double = 0.5): DataFrame =
     reportFrom(df, idCol,
       df.select(col(idCol), TextAnalysis.tokens(lower(col(textCol))).as("_toks"))
         .select(col(idCol), explode(spanHashes(col("_toks"), n)).as("h")),
-      maxDupFrac)
-
-  /** Production span report: the fused single-pass xxhash64 kernel
-    * (`span_hash`, graft.expressions.SpanHashExpr) instead of the md5 +
-    * hex-decode-per-window portable path — same report, pinned equal by
-    * SpanHashExprSpec. */
-  def spanReportFast(df: DataFrame, idCol: String, textCol: String, n: Int,
-                     maxDupFrac: Double = 0.5): DataFrame =
-    reportFrom(df, idCol,
-      df.select(col(idCol), TextAnalysis.tokens(lower(col(textCol))).as("_toks"))
-        .select(col(idCol),
-          explode(graft.expressions.SpanHashExpr.spanHashes(col("_toks"), n))
-            .as("h")),
       maxDupFrac)
 
   /** Winnowed fingerprint selection (Schleimer, Wilkerson & Aiken 2003 —
@@ -117,24 +103,6 @@ object SpanDedup {
     winnowReportFrom(df, idCol,
       df.select(col(idCol), TextAnalysis.tokens(lower(col(textCol))).as("_toks"))
         .select(col(idCol), spanHashes(col("_toks"), n).as("_spans"))
-        .select(col(idCol),
-          explode(winnowFromSpans(col("_spans"), w)).as("fp")))
-
-  /** Production winnow report: the fused single-pass xxhash64 span kernel
-    * (`span_hash`) instead of the md5 portable path. NOTE the two paths
-    * are NOT row-identical: winnowing keeps each window's MINIMUM hash, so
-    * the selected fingerprint subset depends on the hash's value order and
-    * exact counts differ slightly between kernels. What both preserve —
-    * pinned by SpanDedupSpec — are the MOSS invariants: the w+n−1 sharing
-    * guarantee, exact clones fully shared, disjoint docs share nothing,
-    * the ~2/(w+1) density bound, and zero fingerprints below n tokens. */
-  def winnowReportFast(df: DataFrame, idCol: String, textCol: String, n: Int,
-                       w: Int): DataFrame =
-    winnowReportFrom(df, idCol,
-      df.select(col(idCol), TextAnalysis.tokens(lower(col(textCol))).as("_toks"))
-        .select(col(idCol),
-          graft.expressions.SpanHashExpr.spanHashes(col("_toks"), n)
-            .as("_spans"))
         .select(col(idCol),
           explode(winnowFromSpans(col("_spans"), w)).as("fp")))
 

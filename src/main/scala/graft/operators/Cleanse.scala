@@ -50,11 +50,6 @@ object Cleanse {
     df.drop(df.columns.filterNot(c => known.contains(c.toLowerCase)).toIndexedSeq: _*)
   }
 
-  /** User column-list projection with union-of-schemas fallback (reference
-    * `utilities/utilities.py:84-107`). */
-  def resolvedColumns(userCols: Option[Seq[String]], allCols: Seq[String]): Seq[String] =
-    userCols.filter(_.nonEmpty).getOrElse(allCols)
-
   // ---------------------------------------------------------------- values
 
   private val dateRe = "^\\d{4}-\\d{2}-\\d{2}$"
@@ -116,10 +111,4 @@ object Cleanse {
       .na.fill(-99.0, dblCols)
       .na.fill("", strCols)
   }
-
-  /** Derived-column apply (reference `utilities/utilities.py:577-583`) —
-    * the engine-level equivalent is just `withColumn` with a built-in
-    * expression; kept for API parity. */
-  def applyChange(df: DataFrame, newCol: String, expr: Column): DataFrame =
-    df.withColumn(newCol, expr)
 }

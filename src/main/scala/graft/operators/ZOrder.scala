@@ -44,6 +44,22 @@ object ZOrder {
     terms.reduce(_ bitwiseOR _)
   }
 
+  /** [[zValue]] as ANSI SQL over column names (for oracles/codegen
+    * review): masked inputs, one `((x >> i) & 1) * 2^p` term per bit,
+    * bit-major, summed — `+` of disjoint powers of two equals the
+    * engine's OR-fold. */
+  def zValueSql(cols: Seq[String], bits: Int = 16): String = {
+    require(cols.nonEmpty, "zValueSql needs at least one column")
+    require(bits * cols.size <= 62, s"z-value would exceed a long: $bits bits × ${cols.size} columns")
+    val n = cols.size
+    val mask = (1L << bits) - 1
+    val terms = for {
+      i <- 0 until bits
+      (c, j) <- cols.zipWithIndex
+    } yield s"((($c & $mask) >> $i) & 1) * ${1L << (i * n + j)}"
+    terms.mkString("(", " + ", ")")
+  }
+
   /** Equi-width bucket of a numeric column into [0, 2^bits) given its
     * (driver-known) min/max — the simplest rank proxy; exact ranks via
     * ntile/percent_rank work too but cost a shuffle. */

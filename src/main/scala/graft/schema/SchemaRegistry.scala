@@ -55,6 +55,8 @@ final case class SchemaRegistry(versions: Map[Int, Set[String]]) {
 
 object SchemaRegistry {
 
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** The reference's seed registry (`{"0": []}`). */
   val seed: SchemaRegistry = SchemaRegistry(Map(0 -> Set.empty[String]))
 
@@ -63,17 +65,19 @@ object SchemaRegistry {
     * columns sorted. Written through the Hadoop filesystem so the path may
     * use any supported scheme (file:, hdfs:, s3a:, …) — registry size is
     * the number of schema versions, so a driver-side write is correct at
-    * any data scale. */
+    * any data scale. Jackson writes it, so a column name holding quotes,
+    * backslashes or control characters reads back through [[load]]. */
   def save(spark: org.apache.spark.sql.SparkSession,
            registry: SchemaRegistry, path: String): Unit = {
-    val json = registry.versions.toSeq.sortBy(_._1).map { case (id, ks) =>
-      ks.toSeq.sorted.map(c => "\"" + c.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-        .mkString(s""""$id": [""", ", ", "]")
-    }.mkString("{", ", ", "}")
+    val node = mapper.createObjectNode()
+    registry.versions.toSeq.sortBy(_._1).foreach { case (id, ks) =>
+      val cols = node.putArray(id.toString)
+      ks.toSeq.sorted.foreach(c => cols.add(c))
+    }
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(mapper.writeValueAsBytes(node))
     finally out.close()
   }
 
@@ -89,8 +93,7 @@ object SchemaRegistry {
       val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
       val in = fs.open(p)
       try in.readFully(0L, bytes) finally in.close()
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+      val node = mapper.readTree(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
       import scala.jdk.CollectionConverters._
       Some(SchemaRegistry(node.properties().asScala.map { e =>
         e.getKey.toInt -> e.getValue.elements().asScala.map(_.asText()).toSet

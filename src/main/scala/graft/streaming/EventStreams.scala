@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Event-time windowed aggregation shapes for the events stream. The same
@@ -18,11 +18,6 @@ object EventStreams {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n"), col("total_value"))
-
-  /** Watermarked streaming variant of tumblingAgg. */
-  def tumblingAggStream(events: DataFrame, tsCol: String, windowDur: String,
-                        lateness: String): DataFrame =
-    tumblingAgg(events.withWatermark(tsCol, lateness), tsCol, windowDur)
 
   /** Streaming exact dedup by id with BOUNDED state:
     * `dropDuplicatesWithinWatermark` keeps an id in state only until the

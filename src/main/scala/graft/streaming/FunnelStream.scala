@@ -89,8 +89,11 @@ object FunnelStream {
     // join+aggregation round per funnel step (identical algebra: "the
     // earliest qualifying event after the just-updated previous step"
     // is the FIRST qualifying element of the ts-sorted array; ties in
-    // ts carry the same ts value either way)
-    val evs = batch
+    // ts carry the same ts value either way). Null-ts events are dropped
+    // up front: array_sort puts them at the FRONT, where a step-1 one
+    // would give step 1 a null time and drop the user, while the batch
+    // funnel's min() skips them
+    val evs = batch.filter(col(tsCol).isNotNull)
       .select(user, struct(col(tsCol).as("_ts"), col(typeCol).as("_tp"))
         .as("_e"))
       .groupBy(user).agg(array_sort(collect_list(col("_e"))).as("_evs"))

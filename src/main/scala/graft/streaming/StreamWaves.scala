@@ -37,10 +37,12 @@ object StreamWaves {
     * `partitionBy` wave into a sibling temp dir, then moved into `src`):
     * the per-wave coalesce(1) jobs this replaces serialized N scans of
     * the base frame plus N single-task writes behind N job submissions.
-    * File CONTENT is byte-identical to the per-wave path: a per-wave
-    * `monotonically_increasing_id` captures each wave frame's partition-
-    * order row sequence (exactly the order coalesce(1) concatenates),
-    * and the staged partition sorts by it before writing. */
+    * Each staged file holds the same SET of rows as the per-wave path.
+    * Row order is best-effort: a per-wave `monotonically_increasing_id`
+    * captures each wave frame's partition-order row sequence and the
+    * staged partition sorts by it, but a wave whose plan shuffles may be
+    * partitioned differently inside the union than on its own. Columns
+    * follow wave 0's order (`unionByName`). */
   private val lastMtime = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Next staged-file mtime: recent enough that FileStreamSource's
@@ -122,14 +124,10 @@ object StreamWaves {
     * detection diffs the listing per write. Cross-directory mtime
     * interleaving is irrelevant — each file source orders only its own
     * directory. */
-  def stageAll(dirs: Seq[(String, Seq[DataFrame])]): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, dirs.size))
-    try dirs.map { case (d, ws) =>
-        pool.submit(new Runnable { override def run(): Unit = stage(d, ws) })
-      }.foreach(_.get())
-    finally pool.shutdown()
-  }
+  def stageAll(dirs: Seq[(String, Seq[DataFrame])]): Unit =
+    graft.operators.Concurrent.parMap(dirs, dirs.size) {
+      case (d, ws) => stage(d, ws)
+    }
 
   /** A schema'd parquet file-source reader with an optional
     * files-per-micro-batch cap. */

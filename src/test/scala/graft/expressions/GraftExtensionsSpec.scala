@@ -88,4 +88,30 @@ class GraftExtensionsSpec extends SparkSpec {
     }
     assert(notJson.getMessage.contains("unigram_apply"), notJson.getMessage)
   }
+
+  test("registered SQL functions evaluate (extensions hook)") {
+    GraftExtensions.register(spark)
+    // the whole native-expression surface is SQL-callable and agrees with
+    // the Column-level entry points
+    val sql = spark.sql(
+      """SELECT
+        | minhash_sig(hashed_shingles('hello world docs', 5), 16) AS sig,
+        | word_shingle_hash(array('a','b','c','d'), 3) AS ws,
+        | jaccard_sorted(array(1L, 2L, 3L), array(2L, 3L, 4L)) AS j,
+        | dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d""".stripMargin)
+      .collect().head
+    val viaColumns = spark.range(1).select(
+        graft.functions.Dedup.minhashSignatureFromHashes(
+          graft.functions.Dedup.hashedCharShingles(
+            org.apache.spark.sql.functions.lit("hello world docs"), 5), 16)
+          .as("sig"),
+        graft.functions.Dedup.hashedWordShingles(
+          org.apache.spark.sql.functions.typedLit(Seq("a", "b", "c", "d")), 3)
+          .as("ws"))
+      .collect().head
+    assert(sql.getSeq[Long](0) == viaColumns.getSeq[Long](0))
+    assert(sql.getSeq[Long](1) == viaColumns.getSeq[Long](1))
+    assert(sql.getDouble(2) == 0.5)
+    assert(sql.getDouble(3) == 11.0)
+  }
 }

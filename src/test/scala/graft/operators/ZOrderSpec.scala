@@ -38,6 +38,49 @@ class ZOrderSpec extends SparkSpec {
     }
   }
 
+  /** Two-column z-value of one (a, b) point. */
+  private def z(a: Long, b: Long, bits: Int = 16): Long =
+    Seq((a, b)).toDF("a", "b")
+      .select(ZOrder.zValue(Seq($"a", $"b"), bits)).as[Long].head()
+
+  test("hand-checked interleave: a in even lanes, b in odd") {
+    assert(z(0L, 0L) == 0L)
+    assert(z(1L, 0L) == 1L)  // a bit 0 -> position 0
+    assert(z(0L, 1L) == 2L)  // b bit 0 -> position 1
+    assert(z(3L, 0L) == 5L)  // 0b11 -> 0b0101
+    assert(z(0L, 3L) == 10L) // 0b11 -> 0b1010
+    assert(z(3L, 3L) == 15L)
+    assert(z(5L, 2L) == 0b011001L) // a=101, b=010 -> 0 1 1 0 0 1
+  }
+
+  test("inputs mask to the low bits; result stays non-negative") {
+    // bits=4: only low 4 bits survive
+    assert(z(0x13L, 0L, 4) == z(0x3L, 0L, 4))
+    assert(z((1L << 31) - 1, (1L << 31) - 1, 31) > 0L)
+  }
+
+  test("z-locality: quadrant prefix — high input bits dominate") {
+    // points in the same (high-bit) quadrant sort together: every z in
+    // quadrant (1,1) of a 2-bit space exceeds every z in quadrant (0,0)
+    val q00 = for (a <- 0L to 1L; b <- 0L to 1L) yield z(a, b, 2)
+    val q11 = for (a <- 2L to 3L; b <- 2L to 3L) yield z(a, b, 2)
+    assert(q00.max < q11.min)
+  }
+
+  test("SQL restatement matches the column expression") {
+    val rows = Seq((513L, 77L, 5L), (65535L, 1L, 0L), (70000L, 70000L, 9L))
+      .toDF("a", "b", "c")
+    rows.createOrReplaceTempView("zin")
+    for ((cols, bits) <- Seq((Seq("a", "b"), 16), (Seq("a", "b", "c"), 8))) {
+      val viaCol = rows.select(ZOrder.zValue(cols.map(col), bits))
+        .as[Long].collect().toSeq
+      val viaSql = spark.sql("SELECT CAST(" +
+          ZOrder.zValueSql(cols, bits) + " AS BIGINT) FROM zin")
+        .as[Long].collect().toSeq
+      assert(viaCol == viaSql, cols)
+    }
+  }
+
   test("bucketize maps the numeric range onto [0, 2^bits), clamping BOTH ends") {
     val got = Seq(0.0, 50.0, 100.0).toDF("x")
       .select(ZOrder.bucketize($"x", 0.0, 100.0, 4).as("b"))

@@ -41,6 +41,16 @@ class SchemaRegistrySpec extends SparkSpec {
     assert(back.get.observe(Seq(Set("0_first"))).versionOf(Set("0_first")).contains(3))
   }
 
+  test("save/load round-trips column names holding control characters") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_reg").toString
+    val path = s"$dir/FSM_Odd_schemas.json"
+    val r = SchemaRegistry.seed.observe(Seq(
+      Set("line\nbreak", "tab\tbed", "soh\u0001", "quote\"back\\slash"),
+      Set("plain")))
+    SchemaRegistry.save(spark, r, path)
+    assert(SchemaRegistry.load(spark, path).contains(r))
+  }
+
   test("discover + assign tags rows with their keyset version") {
     import spark.implicits._
     val df = Seq(

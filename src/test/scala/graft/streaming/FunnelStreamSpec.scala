@@ -153,4 +153,25 @@ class FunnelStreamSpec extends SparkSpec {
     assert(byUser(2L)._3.isEmpty)
     assert(byUser(5L)._4.isDefined)
   }
+
+  test("a null-timestamp step-1 event does not drop a user who has valid " +
+      "step-1 events, matching the batch funnel") {
+    val dir = Files.createTempDirectory("fstreamn").toString
+    val src = s"$dir/landing"
+    val events = Seq(
+      (7L, null.asInstanceOf[Timestamp], "view"),
+      (7L, ts("2024-02-01 10:00:00"), "view"),
+      (7L, ts("2024-02-01 10:05:00"), "click"))
+    val df = events.toDF("user_id", "ts", "etype")
+    df.coalesce(1).write.parquet(src)
+    FunnelStream.runAvailableNow(spark, src, df.schema, "user_id", "ts",
+      "etype", steps, s"$dir/state", s"$dir/ckpt")
+    val want = Funnels.funnelTimes(df, "user_id", "ts", "etype", steps)
+      .orderBy("user_id")
+      .as[(Long, Option[Timestamp], Option[Timestamp], Option[Timestamp])]
+      .collect().toSeq
+    assert(standing(dir) == want)
+    assert(want.map(_._1) == Seq(7L))
+    assert(want.head._3.contains(ts("2024-02-01 10:05:00")))
+  }
 }
